@@ -33,12 +33,7 @@ object Bench {
     val t0 = System.nanoTime()
     // noop sink: materializes every column of the full plan (count()
     // would let Catalyst prune projections + the final sort).
-    val err =
-      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
-      catch { case e: Throwable =>
-        Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-          .takeWhile(_ != '\n').take(200))
-      }
+    val err = attempt(fn(spark, dir).write.format("noop").mode("overwrite").save())
     val secs = (System.nanoTime() - t0) / 1e9
     // Drop this query's persisted blocks before the next one runs.
     // The iterative operators pin frames with eager localCheckpoint;
@@ -46,7 +41,7 @@ object Bench {
     // BlockManager for the whole session and the tail of the bench
     // (the scale probes) times GC pressure instead of the operator —
     // r10 measured d10_semdedup_auto at 40.3 s here vs 3.7 s in an
-    // uncontended session (ProbeAudit). Cleanup runs OUTSIDE the
+    // uncontended session (Inspect dials). Cleanup runs OUTSIDE the
     // timed window: the frame is fully consumed by the noop sink, so
     // nothing downstream re-reads the dropped blocks.
     spark.sharedState.cacheManager.clearCache()
@@ -60,6 +55,24 @@ object Bench {
     catch { case _: Throwable => () }
     (secs, err)
   }
+
+  /** Run `f`; a failure becomes its first message line (the class
+    * name when it has no message), capped for the JSON line.
+    */
+  private def attempt(f: => Unit): Option[String] =
+    try { f; None }
+    catch { case e: Throwable =>
+      Some(Option(e.getMessage).getOrElse(e.getClass.getName)
+        .takeWhile(_ != '\n').take(200))
+    }
+
+  /** Best-effort recursive delete of a staged probe corpus. */
+  private def dropDir(spark: SparkSession, dir: String): Unit =
+    try {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    } catch { case _: Throwable => () }
 
   /** Per-run shuffle-write accounting for the sketch-regime probe: a
     * listener sums stage-level shuffle bytes written during one timed
@@ -124,8 +137,8 @@ object Bench {
     "m02_incremental_merge", "m31_merge_on_read", "q26_cohort_retention",
     "q31_window_range_frame", "q34_dpp",
     "s05_knn_graph", "s08_range_search", "x08_tfidf",
-    // x20 is probed via its PRODUCTION form (no oracle orderBy) in a
-    // dedicated block below — the registered entry's global sort was
+    // x20 is probed via its PRODUCTION form (no oracle orderBy) in
+    // scaleDials — the registered entry's global sort was
     // the superlinear term in the r14 probe (12.4× at 10×)
     "x18_token_budget_sample", "x21_char_entropy",
     "x22_bpe_train", "x24_nb_classifier", "x25_bpe_encode",
@@ -244,6 +257,78 @@ object Bench {
     // the join; w04's 10x fixture generation is driver-side but
     // linear and outside the claim (p06's reasoning)
     "p08_domain_rank_curation")
+
+  /** The 10× scale dials: (reported name, base entry, plan). Each
+    * runs once on the staged 10× corpus and reports against its base's
+    * 1× median; a filtered run that names the base runs its dial.
+    */
+  private val scaleDials
+      : Seq[(String, String, (SparkSession, String) => DataFrame)] = Seq(
+    // d05, AUTomatic: bits derived from a corpus count
+    // (Ann.adaptiveBits — occupancy-preserving), the path a 100x
+    // corpus takes without hand-tuning
+    ("d05_embedding_neardup_auto", "d05_embedding_neardup", (s, d) =>
+      graft.operators.Ann.nearDupLshAuto(
+        s.read.parquet(s"$d/embeddings.parquet"),
+        threshold = 0.4, tables = 8, dim = 64, seed = 7L)),
+    // d03: Manku block-combination banding (at the 10x corpus the dial
+    // picks b=6 — 20 tables of 30-bit keys) vs the registered 4×15
+    // pigeonhole, whose random collisions grow n²/2¹⁵ (measured 78×
+    // candidate volume at 10×). Same reported pairs, bounded occupancy.
+    ("d03_dedup_simhash_auto", "d03_dedup_simhash", (s, d) =>
+      graft.operators.Dedup.simhashPairsAuto(
+        s.read.parquet(s"$d/documents.parquet"), n = 3, maxDist = 3)),
+    // d04: DF cap derived from (rows, docs) so candidate partners per
+    // doc hold at the budget — vs the registered fixed maxDf=1000
+    ("d04_ngram_jaccard_auto", "d04_ngram_jaccard", (s, d) =>
+      graft.operators.Dedup.ngramJaccardPairsAuto(
+        s.read.parquet(s"$d/documents.parquet"), n = 3, threshold = 0.5)),
+    // d10: adaptive k (DataFrame-native k-means) vs the registered
+    // fixed-k SemDeDup
+    ("d10_semdedup_auto", "d10_semdedup", (s, d) =>
+      graft.operators.Ann.semDedupAuto(
+        s.read.parquet(s"$d/embeddings.parquet"), threshold = 0.4)),
+    // s05: occupancy-held k-NN graph (k ∝ n via the DataFrame-native
+    // k-means) vs the registered fixed-16-centroid graph, whose
+    // within-cluster work is quadratic at fixed k (ratio ~9 here)
+    ("s05_knn_graph_auto", "s05_knn_graph", (s, d) =>
+      graft.operators.Ann.knnGraphAuto(
+        s.read.parquet(s"$d/embeddings.parquet"), k = 3)),
+    // s15: IVF-shortlist bitext margin (per-pool occupancy-held
+    // codebooks, cluster-key equi-joins) vs the registered exact form,
+    // whose |src|·|tgt| crossJoin is the one cartesian on the board —
+    // at 10× the pools are ~500 a side, so the exact product is 100×
+    // the 1× work while the shortlist probes ~nProbe/k of it
+    ("s15_bitext_margin_auto", "s15_bitext_margin", (s, d) => {
+      val e = s.read.parquet(s"$d/embeddings.parquet")
+      graft.operators.Ann.bitextMarginAuto(
+        e.filter(col("label") === 0), e.filter(col("label") === 1), k = 4)
+    }),
+    // p03: Ntile.exact keeps tercile parallelism at shuffle partitions
+    // where the registered per-language NTILE window funnels each
+    // language through one task — same assignment
+    ("p03_ccnet_pipeline_auto", "p03_ccnet_pipeline", (s, d) =>
+      SparkEntry.queries("p03_ccnet_pipeline_auto")(s, d)),
+    // x20 in its PRODUCTION form (TextQueries.gopherRules, no global
+    // sort): the registered entry's orderBy exists only for the oracle
+    // diff — the battery is one codegen'd projection pass whose 10×
+    // cost should be the scan. The 1× baseline stays the registered
+    // median (sort included), so the ratio is conservative. x20 is
+    // therefore not in scaleOps.
+    ("x20_gopher_rules", "x20_gopher_rules", (s, d) =>
+      graft.queries.TextQueries.gopherRules(
+        s.read.parquet(s"$d/documents.parquet"))),
+    // mm05 payload: 10× the CLIPS (1200 base + 400 planted copies,
+    // ~52 MB of WAV payload vs ~5 MB registered) through the same
+    // decode→fingerprint→pigeonhole pipeline. A linear ratio pins the
+    // only-features-leave-the-partition claim: the join and shuffle see
+    // 8-byte fingerprints regardless of payload bytes.
+    ("mm05_audio_dedup_10x", "mm05_audio_dedup", (s, _) =>
+      graft.operators.Multimodal.phashPairs(
+        graft.operators.Multimodal.audioFingerprint(
+          graft.operators.Multimodal.wavDupMedia(s, 1200))
+          .select(col("media_id"), col("afp").as("phash")),
+        maxHamming = 2)))
 
   /** Stage a `copies`x corpus of the tables the probed operators read.
     * Key columns are shifted per copy so cardinalities scale; content
@@ -387,14 +472,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val doScale = sys.env.getOrElse("SPARK_GRAFT_SCALE10X", "1") != "0"
     // local-iteration aid: comma-separated query-name filter (the
     // driver never sets it — full board). Filtered runs intersect the
     // probe tail with the filter: naming a probed op runs ITS probe
     // (and its dial sibling, for the bases that have one) and nothing
-    // else — the uncontended per-op probe the ProbeAudit compares
+    // else — the uncontended per-op probe `Inspect dials` compares
     // driver-shaped numbers against.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -406,20 +490,7 @@ object Bench {
     // hard wall for the optional scale10x tail so a contended sandbox
     // can never push the bench past the driver's patience
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2400").toDouble
-    def mkSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          s"${System.getProperty("java.io.tmpdir")}/graft_spark_warehouse")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = mkSession()
+    var spark = GraftSession.build()
     val benchStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
     def sweepScratch(): Unit = locally {
@@ -469,10 +540,7 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
     val passes = (1 to iters).map { p =>
       if (p > 1) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = mkSession()
+        spark = GraftSession.fresh()
         warmup()
         try graft.queries.Relational.stageQ34(spark, sfDir)
         catch { case _: Throwable => () }
@@ -501,13 +569,8 @@ object Bench {
       es.headOption.map(e => (n, e, es.size))
     }
 
-    // x20 lives here (not in scaleOps) since its probe runs the
-    // PRODUCTION form in a dedicated block — listing it keeps the
-    // "naming a probed op runs ITS probe" contract for filtered runs
-    val dialBases = Seq("d05_embedding_neardup", "d03_dedup_simhash",
-      "d10_semdedup", "s05_knn_graph", "d06_dedup_groups",
-      "s15_bitext_margin", "d04_ngram_jaccard", "p03_ccnet_pipeline",
-      "x20_gopher_rules")
+    // the dials' bases plus d06, whose only probe is the 100x-docs one
+    val dialBases = scaleDials.map(_._2) :+ "d06_dedup_groups"
     // (name, sec, shuffle_bytes, err) rows filled by the sketch-regime
     // probe inside the 100x-docs block; reported as "sketch_probe"
     val sketchProbe = scala.collection.mutable.ArrayBuffer
@@ -534,12 +597,9 @@ object Bench {
         //    timed()'s clearCache+unpersist does not reach.
         // The tail therefore runs on a FRESH SparkSession over an
         // emptied scratch root — the same isolation an uncontended
-        // ProbeAudit run has, so the artifact grades the operators.
+        // `Inspect dials` run has, so the artifact grades the operators.
         sweepScratch()
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        val sp = mkSession()
+        val sp = GraftSession.fresh()
         // absorb the fresh session's executor/BlockManager setup
         // outside the first probe's timing (head-warmup discipline)
         sp.read.parquet(s"$sfDir/nation.parquet")
@@ -547,12 +607,7 @@ object Bench {
         val scaleDir = graft.core.Scratch.dir("scale10x").toString
         // a staging failure (disk full, interrupted write) must not
         // take the whole bench line — and all 75 medians — with it
-        val staged =
-          try { stageScaled(sp, sfDir, scaleDir); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-              .takeWhile(_ != '\n').take(200))
-          }
+        val staged = attempt(stageScaled(sp, sfDir, scaleDir))
         if (staged.isDefined)
           probeOps.map(n =>
             (n, -1.0, medians(n), Some(s"staging_failed: ${staged.get}")))
@@ -598,82 +653,11 @@ object Bench {
             val (secs, err) = timed(sp, scaleDir, SparkEntry.queries(n))
             (n, secs, medians(n), err)
           }
-        } ++ {
-          // the d05 scale dial, now AUTomatic: bits derived from a
-          // corpus count (Ann.adaptiveBits — occupancy-preserving),
-          // run on the same 10x corpus and reported against the
-          // registered fixed-bits d05's 1x median. This is the path a
-          // 100x corpus takes without hand-tuning.
-          if (elapsed > budgetSec || !probing("d05_embedding_neardup")) Nil
+        } ++ scaleDials.flatMap { case (name, base, fn) =>
+          if (elapsed > budgetSec || !probing(base)) Nil
           else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.operators.Ann.nearDupLshAuto(
-                s.read.parquet(s"$d/embeddings.parquet"),
-                threshold = 0.4, tables = 8, dim = 64, seed = 7L))
-            Seq(("d05_embedding_neardup_auto", secs, medians("d05_embedding_neardup"), err))
-          }
-        } ++ {
-          // the d03 scale dial: Manku block-combination banding (at
-          // the 10x corpus the dial picks b=6 — 20 tables of 30-bit
-          // keys) vs the registered 4×15 pigeonhole, whose random
-          // collisions grow n²/2¹⁵ (measured 78× candidate volume at
-          // 10×). Same reported pairs, bounded occupancy.
-          if (elapsed > budgetSec || !probing("d03_dedup_simhash")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.operators.Dedup.simhashPairsAuto(
-                s.read.parquet(s"$d/documents.parquet"), n = 3, maxDist = 3))
-            Seq(("d03_dedup_simhash_auto", secs, medians("d03_dedup_simhash"), err))
-          }
-        } ++ {
-          // the d04 occupancy dial: DF cap derived from (rows, docs)
-          // so candidate partners per doc hold at the budget — vs the
-          // registered fixed maxDf=1000, probed on the same 10x corpus
-          if (elapsed > budgetSec || !probing("d04_ngram_jaccard")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.operators.Dedup.ngramJaccardPairsAuto(
-                s.read.parquet(s"$d/documents.parquet"), n = 3, threshold = 0.5))
-            Seq(("d04_ngram_jaccard_auto", secs, medians("d04_ngram_jaccard"), err))
-          }
-        } ++ {
-          // the d10 scale dial: adaptive k (DataFrame-native k-means)
-          // vs the registered fixed-k SemDeDup on the same 10x corpus
-          if (elapsed > budgetSec || !probing("d10_semdedup")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.operators.Ann.semDedupAuto(
-                s.read.parquet(s"$d/embeddings.parquet"),
-                threshold = 0.4))
-            Seq(("d10_semdedup_auto", secs, medians("d10_semdedup"), err))
-          }
-        } ++ {
-          // the s05 scale dial: occupancy-held k-NN graph (k ∝ n via
-          // the DataFrame-native k-means) vs the registered fixed-16-
-          // centroid graph, whose within-cluster work is quadratic
-          // at fixed k (ratio ~9 on this probe)
-          if (elapsed > budgetSec || !probing("s05_knn_graph")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.operators.Ann.knnGraphAuto(
-                s.read.parquet(s"$d/embeddings.parquet"), k = 3))
-            Seq(("s05_knn_graph_auto", secs, medians("s05_knn_graph"), err))
-          }
-        } ++ {
-          // the s15 scale dial: IVF-shortlist bitext margin (per-pool
-          // occupancy-held codebooks, cluster-key equi-joins) vs the
-          // registered exact form, whose |src|·|tgt| crossJoin is the
-          // one cartesian on the board — at 10× the pools are ~500 a
-          // side, so the exact product is 100× the 1× work while the
-          // shortlist probes ~nProbe/k of it.
-          if (elapsed > budgetSec || !probing("s15_bitext_margin")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) => {
-              val e = s.read.parquet(s"$d/embeddings.parquet")
-              graft.operators.Ann.bitextMarginAuto(
-                e.filter(col("label") === 0), e.filter(col("label") === 1), k = 4)
-            })
-            Seq(("s15_bitext_margin_auto", secs, medians("s15_bitext_margin"), err))
+            val (secs, err) = timed(sp, scaleDir, fn)
+            Seq((name, secs, medians(base), err))
           }
         } ++ {
           // d20 SHUFFLE-METERED at 1× and 10× (the docstring's
@@ -700,49 +684,6 @@ object Bench {
             Nil
           }
         } ++ {
-          // the p03 tercile dial: Ntile.exact keeps tercile
-          // parallelism at shuffle partitions where the registered
-          // per-language NTILE window funnels each language through
-          // one task — same assignment, measured on the same corpus
-          if (elapsed > budgetSec || !probing("p03_ccnet_pipeline")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir,
-              SparkEntry.queries("p03_ccnet_pipeline_auto"))
-            Seq(("p03_ccnet_pipeline_auto", secs,
-              medians("p03_ccnet_pipeline"), err))
-          }
-        } ++ {
-          // x20 probed in its PRODUCTION form (TextQueries.gopherRules, no
-          // global sort): the registered entry's orderBy exists only
-          // for the oracle diff — the battery itself is one codegen'd
-          // projection pass whose 10× cost should be the scan. The 1×
-          // baseline stays the registered median (sort included), so
-          // the reported ratio is conservative.
-          if (elapsed > budgetSec || !probing("x20_gopher_rules")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, d) =>
-              graft.queries.TextQueries.gopherRules(
-                s.read.parquet(s"$d/documents.parquet")))
-            Seq(("x20_gopher_rules", secs, medians("x20_gopher_rules"), err))
-          }
-        } ++ {
-          // mm05 payload probe: 10× the CLIPS (1200 base + 400 planted
-          // copies, ~52 MB of WAV payload vs ~5 MB registered) through
-          // the same decode→fingerprint→pigeonhole pipeline. Linear
-          // ratio pins the only-features-leave-the-partition claim:
-          // the join and shuffle see 8-byte fingerprints regardless of
-          // payload bytes, so cost scales with clip count only.
-          if (elapsed > budgetSec || !probing("mm05_audio_dedup")) Nil
-          else {
-            val (secs, err) = timed(sp, scaleDir, (s, _) =>
-              graft.operators.Multimodal.phashPairs(
-                graft.operators.Multimodal.audioFingerprint(
-                  graft.operators.Multimodal.wavDupMedia(s, 1200))
-                  .select(col("media_id"), col("afp").as("phash")),
-                maxHamming = 2))
-            Seq(("mm05_audio_dedup_10x", secs, medians("mm05_audio_dedup"), err))
-          }
-        } ++ {
           // 100× embeddings probe: the 10× probe cannot separate the
           // Auto paths' O(n·√k) routed assignment from a quadratic —
           // at 10× the adaptive k is still under RouteThreshold and
@@ -755,12 +696,7 @@ object Bench {
               !(probing("d10_semdedup") && probing("s05_knn_graph"))) Nil
           else {
             val dir100 = graft.core.Scratch.dir("scale100x").toString
-            val staged100 =
-              try { stageEmbeddings100x(sp, sfDir, dir100); None }
-              catch { case e: Throwable =>
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                  .takeWhile(_ != '\n').take(200))
-              }
+            val staged100 = attempt(stageEmbeddings100x(sp, sfDir, dir100))
             val rs100 =
               if (staged100.isDefined)
                 (Seq("d10_semdedup_auto_100x", "s05_knn_graph_auto_100x") ++
@@ -817,11 +753,7 @@ object Bench {
                   (n, secs, base, err)
                 }
               }
-            try {
-              val p = new org.apache.hadoop.fs.Path(dir100)
-              p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-              ()
-            } catch { case _: Throwable => () }
+            dropDir(sp, dir100)
             rs100
           }
         } ++ {
@@ -835,12 +767,7 @@ object Bench {
               !(probing("d03_dedup_simhash") && probing("d06_dedup_groups"))) Nil
           else {
             val dir100d = graft.core.Scratch.dir("scale100xdocs").toString
-            val stagedD =
-              try { stageDocuments100x(sp, sfDir, dir100d); None }
-              catch { case e: Throwable =>
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                  .takeWhile(_ != '\n').take(200))
-              }
+            val stagedD = attempt(stageDocuments100x(sp, sfDir, dir100d))
             val rsD =
               if (stagedD.isDefined)
                 Seq(
@@ -1001,12 +928,7 @@ object Bench {
                         probing("d18_incremental_lsh"))) Nil
                   else {
                     val dir1m = graft.core.Scratch.dir("scale1m").toString
-                    val staged1m =
-                      try { stageDocuments1m(sp, sfDir, dir1m); None }
-                      catch { case e: Throwable =>
-                        Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                          .takeWhile(_ != '\n').take(200))
-                      }
+                    val staged1m = attempt(stageDocuments1m(sp, sfDir, dir1m))
                     val out =
                       if (staged1m.isDefined)
                         Seq("d02_dedup_minhash_1m",
@@ -1062,12 +984,7 @@ object Bench {
                           ("d18_increment_1mcorpus", s18m,
                             medians("d18_incremental_lsh"), e18m))
                       }
-                    try {
-                      val p = new org.apache.hadoop.fs.Path(dir1m)
-                      p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-                        .delete(p, true)
-                      ()
-                    } catch { case _: Throwable => () }
+                    dropDir(sp, dir1m)
                     out
                   }
                 Seq(
@@ -1076,20 +993,11 @@ object Bench {
                   ("d06_dedup_groups_100x", secs6,
                     medians("d06_dedup_groups"), err6)) ++ rsD04 ++ rsD14 ++ rsD17 ++ rsD18 ++ rs1m
               }
-            try {
-              val p = new org.apache.hadoop.fs.Path(dir100d)
-              p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-              ()
-            } catch { case _: Throwable => () }
+            dropDir(sp, dir100d)
             rsD
           }
         }
-        // best-effort scratch cleanup; the data lives under /tmp anyway
-        try {
-          val p = new org.apache.hadoop.fs.Path(scaleDir)
-          p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-          ()
-        } catch { case _: Throwable => () }
+        dropDir(sp, scaleDir)
         rs
         }
       }

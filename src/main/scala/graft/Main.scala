@@ -590,17 +590,8 @@ object Main {
       case Left(err) => System.err.println(err); sys.exit(2)
       case Right(c) => c
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName(s"graft-${cfg.command}")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_spark_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (cfg.verbose) "INFO" else "WARN")
+    val spark = GraftSession.build(app = s"graft-${cfg.command}",
+      logLevel = if (cfg.verbose) "INFO" else "WARN")
     val bar = "=" * 60
     try cfg.command match {
       case "run" if cfg.empty =>

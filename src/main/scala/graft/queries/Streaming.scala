@@ -276,7 +276,7 @@ object Streaming {
     * (e14 heavy batch 18.5s → 5.6s). r19 derives the state-partition
     * count from the landing window ([[streamShufflePartitions]]),
     * which moves each store's state ABOVE the per-store fixed costs —
-    * re-measured A/B at the derived count (ProbeStream, same harness,
+    * re-measured A/B at the derived count (`Inspect stream`, same harness,
     * back to back): HDFS wins BOTH entries (e14 10.7s vs 14.4s,
     * e08 8.9s vs 11.8s — RocksDB's per-batch native instance
     * open/close is pure overhead once the store count is right). So
@@ -293,9 +293,10 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession, default: Boolean = true)(
       f: => A): A = {
     // A/B dial (r18 verdict item #2): `spark.graft.stream.rocksdb`
-    // overrides the per-entry default so ProbeStream's PROBE_CONF can
-    // flip providers without a recompile. The per-entry default is the
-    // MEASURED winner for that entry's state size.
+    // overrides the per-entry default so `Inspect stream` under a
+    // -Dspark.graft.stream.rocksdb property can flip providers without
+    // a recompile. The per-entry default is the MEASURED winner for
+    // that entry's state size.
     val use = spark.conf.getOption("spark.graft.stream.rocksdb")
       .map(_.toBoolean).getOrElse(default)
     if (!use) {
@@ -367,15 +368,21 @@ object Streaming {
     * match either), and negative event_ids let output filters drop
     * the left leg's null-extended sentinel rows.
     */
+  /** `raw`'s latest event time in its landing encoding — one scan per
+    * fixture, shared by every [[sentinelFrame]] built from it.
+    */
+  private def maxEventTs(raw: org.apache.spark.sql.DataFrame): Any =
+    raw.agg(max(col("ts"))).head.get(0)
+
   /** The sentinel ROWS of [[writeWatermarkSentinels]]'s i-th batch as
     * a frame — exposed so a fixture can UNION sentinel 1 into an
     * earlier landing file instead of paying it a micro-batch of its
     * own (e15's r19 shape; the batch-lag analysis lives there).
+    * `maxTs` is [[maxEventTs]] of `raw`.
     */
   private def sentinelFrame(
-      raw: org.apache.spark.sql.DataFrame,
+      raw: org.apache.spark.sql.DataFrame, maxTs: Any,
       legTypes: Seq[String], i: Int): org.apache.spark.sql.DataFrame = {
-    val maxTs = raw.agg(max(col("ts"))).head.get(0)
     // built FROM the raw relation so the sentinel carries whatever
     // ts encoding the landing files use (INT64 nanos or timestamp)
     val ts = maxTs match {
@@ -402,8 +409,9 @@ object Streaming {
       legTypes: Seq[String],
       tag: String,
       nBatches: Int = 2): Unit = {
+    val maxTs = maxEventTs(raw)
     for (i <- 1 to nBatches) {
-      val s = sentinelFrame(raw, legTypes, i)
+      val s = sentinelFrame(raw, maxTs, legTypes, i)
       val tmp = Scratch.dir(s"${tag}_s$i")
       s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator().asScala
@@ -880,10 +888,11 @@ object Streaming {
       // and the late file (batch 2) filters against batch 0's
       // far-future stats (+10 days − 1 h) — every late row's window
       // closed long ago, the same provable drop set as before.
+      val maxTs = maxEventTs(raw)
       land(raw.filter(col("event_id") % 3 =!= 0)
-          .unionByName(sentinelFrame(raw, Seq("sentinel"), 1)),
+          .unionByName(sentinelFrame(raw, maxTs, Seq("sentinel"), 1)),
         "a_events", 1700000000000L)
-      land(sentinelFrame(raw, Seq("sentinel"), 2), "b_sentinel2",
+      land(sentinelFrame(raw, maxTs, Seq("sentinel"), 2), "b_sentinel2",
         1700000120000L)
       land(raw.filter(col("event_id") % 3 === 0), "d_late",
         1700000150000L)

@@ -364,13 +364,15 @@ object WebQueries extends QDsl {
     * block bytes — well under the 8 GB relation cap, and what the old
     * 2²⁰-row gate came to on these narrow host-keyed schemas); above
     * it the hint is withheld and the planner shuffles both sides.
-    * Caller must pass an eagerly-checkpointed frame.
+    * The gate fails closed: 0 bytes means the size is unknown (no
+    * frozen blocks to read — a frame that was not eagerly
+    * checkpointed, or whose blocks are gone), and gets no hint.
     */
-  private def maybeBroadcastCheckpointed(df: DataFrame): DataFrame = {
+  private[graft] def maybeBroadcastCheckpointed(df: DataFrame): DataFrame = {
     val cap = df.sparkSession.conf.getOption("spark.graft.broadcast.maxBytes")
       .map(_.toLong).getOrElse(64L << 20)
     val bytes = org.apache.spark.sql.graftbridge.RddBridge.checkpointBytes(df)
-    if (bytes <= cap) broadcast(df) else df
+    if (bytes > 0L && bytes <= cap) broadcast(df) else df
   }
 
   // ---------------------------------------------------------------

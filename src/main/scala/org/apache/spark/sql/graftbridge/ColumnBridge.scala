@@ -57,11 +57,11 @@ object RddBridge {
     * reading their sizes from the storage registry costs nothing,
     * where a `df.count()` over the same frame is one more Spark job
     * per query (measured r18: w05's gate count was most of its 1×
-    * regression). Returns 0 for a frame with no checkpointed RDD —
-    * callers treat that as "unknown, do not broadcast-hint" only if
-    * they pass it to a gate that fails open; the graft gates fail
-    * CLOSED on 0 by construction (0 ≤ cap ⇒ broadcast) because a
-    * frame this is called on is always an already-frozen one.
+    * regression). Returns 0 when no checkpointed blocks are stored —
+    * a frame that was never frozen, or whose blocks were dropped — so
+    * 0 means "size unknown", and a gate that fails closed must treat
+    * it as too big to broadcast (`0 ≤ cap ⇒ broadcast` would fail
+    * open).
     */
   def checkpointBytes(df: org.apache.spark.sql.DataFrame): Long = {
     val ids = df.queryExecution.analyzed.collect {

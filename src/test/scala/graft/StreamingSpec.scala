@@ -1112,4 +1112,18 @@ class StreamingSpec extends SparkSpec {
       "to the storage registry (the zero-job broadcast gate reads them)")
     RddBridge.unpersistCheckpoint(frozen, blocking = true)
   }
+
+  test("broadcast gate fails closed: an unfrozen frame gets no hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import graft.queries.WebQueries.maybeBroadcastCheckpointed
+    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+      maybeBroadcastCheckpointed(df).queryExecution.analyzed
+        .exists(_.isInstanceOf[ResolvedHint])
+    val df = spark.range(1000L).toDF("id")
+    assert(!hinted(df), "0 checkpoint bytes is an unknown size, not a small one")
+    val frozen = df.localCheckpoint(true)
+    try assert(hinted(frozen), "a small frozen frame is broadcast-hinted")
+    finally org.apache.spark.sql.graftbridge.RddBridge
+      .unpersistCheckpoint(frozen, blocking = true)
+  }
 }
